@@ -212,11 +212,13 @@ object SparkEntry {
     * sibling similarity_sq8 at this dimensionality — 40.2 s vs 28.1 s
     * at sf1 on the SAME candidate set (BASELINE "PQ note"): a packed-
     * LUT ADC scan cannot beat one codegen'd 64-wide dot in a row-
-    * pipeline engine, and the property PQ actually buys — a 64×
-    * smaller stored index — only pays when the index is materialized
-    * and scan IO dominates, which is not this bench's shape. Kept as
-    * an oracled exactness anchor (the ADC arithmetic replays bit-for-
-    * bit in DuckDB), demoted out of the serving total.
+    * pipeline engine. The property PQ actually buys — a 64× smaller
+    * stored index — was measured too: a stored-codes serve took 1.76 s
+    * against 1.42 s for the full-vector `Pipelines.annSearchFrom` at
+    * sf0.1, and its top-5 agreed with it only 0.167 of the time, so
+    * that stored form was removed. Kept as an oracled exactness anchor
+    * (the ADC arithmetic replays bit-for-bit in DuckDB), demoted out
+    * of the serving total.
     */
   val diagnosticQueries: Set[String] =
     Set("dedup_candidate_stats", "dedup_substring_curve",

@@ -38,10 +38,6 @@ import org.apache.spark.sql.functions._
   *     (assignments partitioned by cell prefix), written by
   *     [[materializeAnn]]: [[annSearchFrom]] runs ARBITRARY query
   *     vectors against storage.
-  *   - `pq_codebook/` + `pq_codes/` — the compressed-index twin
-  *     (codes partitioned by the same cell prefix), written by
-  *     [[materializePq]]: [[annSearchPqFrom]] ADC-scores stored codes
-  *     without ever reading a full candidate vector.
   *   - `minhash_buckets/` — the base corpus's MinHash band buckets
   *     with signatures in-bucket, **partitioned by `pb`** (band-hash
   *     prefix): the serving index for [[dedupIncrementalFrom]] — a
@@ -351,91 +347,6 @@ object Pipelines {
 
   private val AnnPartitions = 64
 
-  /** Persist the PQ serving index: the IVF centroid table (probe
-    * geometry — same layout `materializeAnn` writes), the
-    * corpus-size-independent PQ codebook, and the per-vector CODES
-    * partitioned by `pc`. A `pq_codes` row's payload is the 8 codes
-    * plus the norm (~24 B) against the 512 B raw double vector
-    * `ann_assign` stores — the order-of-magnitude on-disk footprint
-    * cut that makes PQ worth its ADC overhead at 100 TB, which the
-    * in-memory bench structurally can't show (BASELINE's "PQ note";
-    * `similarity_pq` is diagnostic-tier for exactly that reason).
-    * Serving never reads a full vector after the query-side LUT
-    * build: see [[annSearchPqFrom]].
-    *
-    * `trainRounds > 0` swaps the seeded codebook for the per-subspace
-    * Lloyd-trained one ([[Similarity.pqTrainedCodebook]]); `codebookK`
-    * overrides the entries-per-subspace capacity (the live tier's
-    * PqK=16 is the oracle-replayable floor); `residual` builds the
-    * IVFADC form (codes quantize r = v − cell centroid). All three
-    * are measured in BASELINE's PQ addendum — on the synthetic
-    * clustered tier every variant converges (the within-cluster
-    * signal is isotropic noise), so ADC's production role is pool
-    * selection ahead of an exact re-rank. The serve side reads every
-    * knob off the snapshot itself, so [[annSearchPqFrom]] needs no
-    * matching config.
-    */
-  def materializePq(spark: SparkSession, sfDir: String, outDir: String,
-                    trainRounds: Int = 0, codebookK: Int = -1,
-                    residual: Boolean = false): Unit = {
-    import spark.implicits._
-    Similarity.ivfCentroids(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/ann_centroids")
-    // single-row marker the serve reads: residual snapshots score
-    // dot(q, cell centroid) + ADC(residual), raw snapshots ADC alone
-    Seq(residual).toDF("residual")
-      .write.mode("overwrite").parquet(s"$outDir/pq_meta")
-    if (residual) {
-      // IVFADC (Jégou et al.): quantize r = v − cell centroid — the
-      // within-cell signal the raw-vector codebook can't resolve at
-      // any cheap K (the measured clustered-decade collapse,
-      // BASELINE PQ addendum)
-      val (cent, assign) = Similarity.ivfServingIndex(spark, sfDir)
-      val resid = assign
-        .join(broadcast(cent), assign("cell") === cent("cent_id"))
-        .selectExpr("vec_id", "nrm", "cell",
-          "zip_with(v, centv, (ra, rb) -> ra - rb) as v")
-        .localCheckpoint() // feeds codebook training AND the encode
-      // seed the residual codebook PAST the IVF seed range: vectors
-      // with vec_id < C are their own cell centroid, so their
-      // residuals are zero vectors — seeding from them collapses the
-      // codebook (Lloyd can't escape all-zero seeds; measured as the
-      // 0.012 clustered-decade agreement before this offset)
-      val ivfC = cent.count()
-      val cb = Similarity.pqTrainedCodebookFrom(
-        resid.selectExpr(s"vec_id - $ivfC as vec_id", "v"),
-        math.max(trainRounds, 0),
-        if (codebookK > 0) codebookK else Similarity.PqKDefault)
-      cb.write.mode("overwrite").parquet(s"$outDir/pq_codebook")
-      writePqCodes(spark, outDir, resid, Similarity.packPqCodes(
-        Similarity.pqEncode(resid.select(col("vec_id"), col("v")), cb)))
-    } else if (trainRounds == 0 && codebookK <= 0) {
-      val (ranked, cb, codes, _) = Similarity.pqIndex(spark, sfDir)
-      cb.write.mode("overwrite").parquet(s"$outDir/pq_codebook")
-      writePqCodes(spark, outDir,
-        ranked.where(col("crk") === 1), Similarity.packPqCodes(codes))
-    } else {
-      // rounds = 0 with a codebookK override yields the seeded
-      // k-entry codebook (the Lloyd loop simply doesn't run)
-      val cb =
-        if (codebookK > 0)
-          Similarity.pqTrainedCodebook(spark, sfDir, trainRounds, codebookK)
-        else Similarity.pqTrainedCodebook(spark, sfDir, trainRounds)
-      cb.write.mode("overwrite").parquet(s"$outDir/pq_codebook")
-      val (_, assign) = Similarity.ivfServingIndex(spark, sfDir)
-      writePqCodes(spark, outDir, assign, Similarity.packPqCodes(
-        Similarity.pqEncode(assign.select(col("vec_id"), col("v")), cb)))
-    }
-  }
-
-  private def writePqCodes(spark: SparkSession, outDir: String,
-                           assign: DataFrame, codesArr: DataFrame): Unit =
-    ParquetSink.writePartitioned(
-      assign.select(col("vec_id"), col("nrm"), col("cell"))
-        .join(codesArr, "vec_id")
-        .withColumn("pc", pmod(col("cell"), lit(AnnPartitions))),
-      s"$outDir/pq_codes", Seq("pc"))
-
   /** Persist the positional postings index for phrase serving — the
     * search-index analog of [[materializeAnn]]: `(token, doc_id, pos)`
     * rows partitioned by a poly-hash prefix of the TOKEN. A phrase
@@ -547,116 +458,15 @@ object Pipelines {
     val np = if (nProbe > 0) nProbe
              else Similarity.autoNProbe(cent.count().toInt)
     val q = queries.selectExpr("vec_id", "cast(v as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+      .withColumn("nrm", expr(Similarity.norm("v")))
     val probes = Similarity.ivfRankedFrom(q, cent, np)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"), $"cell")
       .withColumn("pc", pmod($"cell", lit(AnnPartitions)))
     val assign = spark.read.parquet(s"$outDir/ann_assign")
     val cand = probes.join(assign, Seq("pc", "cell"))
     val kept = if (excludeSelfId) cand.where($"query_id" =!= $"vec_id") else cand
-    kept
-      .withColumn("cosine", expr("vec_dot(qv, v) / (qn * nrm)"))
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"query_id")
-          .orderBy($"cosine".desc, $"vec_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
-  }
-
-  /** ANN serving from the PQ snapshot — ADC-score stored CODES against
-    * the query-side lookup table and return the approx-cosine top-k.
-    * The candidate scan reads `pq_codes` only (codes + norm, never a
-    * vector), so at scale the scoring pass moves an order of magnitude
-    * fewer bytes than [[annSearchFrom]]'s full-vector scan; the trade
-    * is approximate ranks (exact re-rank is a k-per-query id-join any
-    * full-precision store can serve afterwards). Geometry and
-    * quantization match the live [[Similarity.similarityPq]]
-    * bit-for-bit — the spec pins stored == live on (neighbor,
-    * approx_cosine, rnk). Residual snapshots (IVFADC) score
-    * dot(q, cell centroid) + ADC(residual) — the coarse term is
-    * computed once per PROBE (np rows/query), so the candidate scan
-    * is still codes-only.
-    */
-  /** `jitterRankKey` is a MEASUREMENT-ONLY knob (the round-12
-    * tie-comparator experiment): it perturbs the rank sort's first key
-    * by a deterministic ≤1e-7-scale hash jitter so the key is
-    * (near-)unique per row and every sort comparison resolves at the
-    * first key instead of falling through tied ADC doubles to the
-    * tiebreaker. Never a serving option — within-tie order changes and
-    * real score gaps below the jitter scale can reorder. */
-  /** The serve's scored-candidate frame — everything before the rank
-    * window: probe selection, the (pc, cell) candidate join against
-    * the stored codes, and the ADC `approx_cosine`. Shared by
-    * [[annSearchPqFrom]] and the stage-decomposition timings in
-    * `tools.PqServeExplain` (a `count()` on this frame prunes the
-    * unused score column and times the pure candidate join; a
-    * `max(approx_cosine)` adds the ADC scan; the full serve adds the
-    * window — the per-stage subtraction that located the K=16/K=64
-    * serve-time inversion).
-    */
-  private[graft] def pqScoredCandidates(spark: SparkSession, outDir: String,
-                                        queries: DataFrame, nProbe: Int = -1,
-                                        excludeSelfId: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val cent = spark.read.parquet(s"$outDir/ann_centroids")
-    val np = if (nProbe > 0) nProbe
-             else Similarity.autoNProbe(cent.count().toInt)
-    val q = queries.selectExpr("vec_id", "cast(v as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
-    val cb = spark.read.parquet(s"$outDir/pq_codebook")
-    // the ADC stride is a property of the SNAPSHOT (its codebook's
-    // entries-per-subspace), not of the live tier's PqK constant;
-    // same for the residual marker (pre-marker snapshots are raw)
-    val adc = Similarity.pqAdcExprFor(Similarity.pqCodebookK(cb))
-    // Absence vs failure matters here: a pre-marker snapshot (no
-    // pq_meta dir) is genuinely raw, but a residual snapshot whose
-    // marker READ fails must not be silently served as raw (qdotc=0
-    // against residual codes = wrong approx_cosine, no error). So:
-    // default false only on ABSENCE; let read exceptions propagate.
-    val metaPath = new org.apache.hadoop.fs.Path(s"$outDir/pq_meta")
-    val residual =
-      metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(metaPath) &&
-      spark.read.parquet(s"$outDir/pq_meta").head().getBoolean(0)
-    val lutArr = Similarity.pqLutFor(
-      q.selectExpr("vec_id as query_id", "v"), cb)
-    val ranked = Similarity.ivfRankedFrom(q, cent, np)
-    // residual snapshots split the score: the exact dot(q, cell
-    // centroid) rides on the PROBE row (np per query — the coarse
-    // term), the ADC sum supplies only the within-cell residual
-    val probes = (if (residual)
-        ranked.join(broadcast(cent), ranked("cell") === cent("cent_id"))
-          .withColumn("qdotc", expr("vec_dot(v, centv)"))
-      else ranked.withColumn("qdotc", lit(0d)))
-      .select($"vec_id".as("query_id"), $"nrm".as("qn"), $"cell", $"qdotc")
-      .withColumn("pc", pmod($"cell", lit(AnnPartitions)))
-      .join(lutArr, "query_id")
-    val codes = spark.read.parquet(s"$outDir/pq_codes")
-    val cand = probes.join(codes, Seq("pc", "cell"))
-    val kept = if (excludeSelfId) cand.where($"query_id" =!= $"vec_id") else cand
-    kept.withColumn("approx_cosine",
-      expr(s"(qdotc + cast(($adc) as double) / 1000000000D) / (qn * nrm)"))
-  }
-
-  def annSearchPqFrom(spark: SparkSession, outDir: String, queries: DataFrame,
-                      k: Int = 5, nProbe: Int = -1,
-                      excludeSelfId: Boolean = false,
-                      jitterRankKey: Boolean = false): DataFrame = {
-    import spark.implicits._
-    pqScoredCandidates(spark, outDir, queries, nProbe, excludeSelfId)
-      .withColumn("rnk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy($"query_id")
-          .orderBy(
-            (if (jitterRankKey)
-               $"approx_cosine" +
-                 pmod(hash($"vec_id"), lit(1048576)).cast("double") * lit(1e-13)
-             else $"approx_cosine").desc,
-            $"vec_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"approx_cosine",
-        $"rnk".cast("int").as("rnk"))
+    Similarity.rankTopK(kept.select($"query_id", $"vec_id".as("neighbor_id"),
+        expr(Similarity.cosine("qv", "v", "qn", "nrm")).as("cosine")), k)
       .orderBy($"query_id", $"rnk")
   }
 
@@ -761,7 +571,7 @@ object Pipelines {
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
       .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+      .withColumn("nrm", expr(Similarity.norm("v")))
     // geometry frozen from the FULL snapshot corpus (base + the gated
     // pending batch) — the live incremental query derives C and the
     // caps from base+batch together, so the stored path must too for
@@ -870,7 +680,7 @@ object Pipelines {
                               threshold: Double = 0.4): DataFrame = {
     val q = Tables.embeddings(spark, sfDir).where(expr(judgedPred))
       .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+      .withColumn("nrm", expr(Similarity.norm("v")))
     embDedupJudge(q, Long.MaxValue, outDir, threshold)._1
   }
 
@@ -904,7 +714,7 @@ object Pipelines {
     graft.streaming.BlockHygiene.releasingNewPersists(spark) {
       val q = batch
         .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-        .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+        .withColumn("nrm", expr(Similarity.norm("v")))
       val (verdicts, batchAssign) = embDedupJudge(q, id, outDir, threshold)
       verdicts.withColumn("batch_id", lit(id))
         .write.mode("overwrite")
@@ -963,9 +773,9 @@ object Pipelines {
     import spark.implicits._
     val protos = broadcast(spark.read.parquet(s"$outDir/protos"))
     batch.selectExpr("vec_id", "label", "cast(v as array<double>) as v")
-      .withColumn("nrm", expr("sqrt(vec_dot(v, v))"))
+      .withColumn("nrm", expr(Similarity.norm("v")))
       .join(protos, "label")
-      .withColumn("proto_cos", expr("vec_dot(v, centv) / (nrm * centn)"))
+      .withColumn("proto_cos", expr(Similarity.cosine("v", "centv", "nrm", "centn")))
       .selectExpr("vec_id", "label", "proto_cos",
         "proto_cos <= coalesce(cutoff, cast(-2.0 as double)) as is_outlier")
       .orderBy($"label", $"vec_id")
@@ -1008,7 +818,7 @@ object Pipelines {
       .where($"vec_id" % mod === 0)
       .selectExpr("vec_id as eval_id",
         "cast(embedding as array<double>) as evv")
-      .selectExpr("eval_id", "evv", "sqrt(vec_dot(evv, evv)) as en")
+      .selectExpr("eval_id", "evv", s"${Similarity.norm("evv")} as en")
       .write.mode("overwrite").parquet(s"$outDir/eval_vecs")
   }
 
@@ -1027,9 +837,9 @@ object Pipelines {
     import spark.implicits._
     val eval = broadcast(spark.read.parquet(s"$outDir/eval_vecs"))
     batch.selectExpr("vec_id as train_id", "cast(v as array<double>) as tv")
-      .withColumn("tn2", expr("sqrt(vec_dot(tv, tv))"))
+      .withColumn("tn2", expr(Similarity.norm("tv")))
       .join(eval, expr("true"))
-      .withColumn("cosine", expr("vec_dot(tv, evv) / (tn2 * en)"))
+      .withColumn("cosine", expr(Similarity.cosine("tv", "evv", "tn2", "en")))
       .groupBy($"train_id")
       .agg(max(struct($"cosine", (-$"eval_id").as("neg_eval"))).as("best"))
       .select($"train_id", (-$"best.neg_eval").as("eval_id"),

@@ -64,14 +64,23 @@ object Similarity {
     */
   private[graft] def multiprobeCount(bits: Int): Int = bits
 
-  /** dot(a, b): the native codegen'd VecDot expression — identical
-    * sequential left-fold arithmetic to the HOF form
-    * `aggregate(zip_with(a, b, *), 0d, +)` (which is CodegenFallback
-    * and ~20× slower on the 4M-pair bench), so oracle parity holds
-    * bit-for-bit.
+  /** The one Spark-side cosine, `dot(q, v) / (qn · vn)`, and the one
+    * place its zero-norm policy lives. `vec_dot` is the native
+    * codegen'd VecDot expression — identical sequential left-fold
+    * arithmetic to the HOF form `aggregate(zip_with(a, b, *), 0d, +)`
+    * (which is CodegenFallback and ~20× slower on the 4M-pair bench),
+    * so oracle parity holds bit-for-bit. `try_divide`, not `/`: a
+    * zero-norm side makes the divisor 0, which Spark 4's default ANSI
+    * mode raises as DIVIDE_BY_ZERO even for doubles; `try_divide`
+    * returns NULL there — what the DuckDB oracle's `/` returns — and
+    * the same double as `/` everywhere else.
     */
-  private def dotSpark(a: String, b: String, sfx: String): String =
-    s"vec_dot($a, $b)"
+  private[textops] def cosine(q: String, v: String, qn: String,
+                              vn: String): String =
+    s"try_divide(vec_dot($q, $v), $qn * $vn)"
+
+  /** ‖v‖ — the norm [[cosine]] divides by, same left-fold dot. */
+  private[textops] def norm(v: String): String = s"sqrt(vec_dot($v, $v))"
 
   private def dotDuck(a: String, b: String, sfx: String): String =
     s"list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
@@ -81,7 +90,7 @@ object Similarity {
   private def vectors(spark: SparkSession, sfDir: String): DataFrame =
     Tables.embeddings(spark, sfDir)
       .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-      .selectExpr("vec_id", "v", s"sqrt(${dotSpark("v", "v", "n")}) as nrm")
+      .selectExpr("vec_id", "v", s"${norm("v")} as nrm")
 
   /** Embedding corpus size — parquet row-group metadata count, one
     * cheap job per query invocation. */
@@ -198,20 +207,82 @@ object Similarity {
     * really wants it.
     */
   def similarityTopK(spark: SparkSession, sfDir: String, k: Int = 10,
-                     sampleMod: Int = -1): DataFrame = {
+                     sampleMod: Int = -1): DataFrame =
+    exactTopK(spark, sfDir, k, panelMod(spark, sfDir, sampleMod))
+      .orderBy(col("query_id"), col("rnk"))
+
+  /** The query-panel modulus: explicit, or [[autoSampleMod]] of the
+    * corpus size (~50 panel queries). */
+  private def panelMod(spark: SparkSession, sfDir: String,
+                       sampleMod: Int): Int =
+    if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
+
+  /** Exact cosine top-k of every panel query (`vec_id % mod == 0`)
+    * over the whole corpus, unsorted — the brute-force ground truth
+    * behind [[similarityTopK]] and every recall gate ([[recallAt]]).
+    */
+  private def exactTopK(spark: SparkSession, sfDir: String, k: Int,
+                        mod: Int): DataFrame = {
     import spark.implicits._
-    val mod = if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
     val e = vectors(spark, sfDir)
     val q = e.where($"vec_id" % mod === 0)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
     val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    q.join(c, $"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)"))
+    rankTopK(q.join(c, $"query_id" =!= $"neighbor_id")
+      .withColumn("cosine", expr(cosine("qv", "cv", "qn", "cn"))), k)
+  }
+
+  /** Per-query top-k of scored candidates `(query_id, neighbor_id,
+    * cosine)` by (cosine DESC, neighbor_id ASC), unsorted — the rank
+    * every exact-cosine tier (brute force, IVF, SRP-LSH, the stored IVF
+    * serve) shares. The
+    * `rnk <= k` filter becomes a WindowGroupLimit, so the top-k is cut
+    * map-side before the query_id exchange.
+    */
+  private[textops] def rankTopK(cand: DataFrame, k: Int): DataFrame =
+    cand
       .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"neighbor_id", $"cosine", $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
+      .where(col("rnk") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("cosine"),
+        col("rnk").cast("int").as("rnk"))
+
+  /** recall@k per panel query: hits = how many of its exact top-k
+    * (`exact`, from [[exactTopK]]) the approximate tier also returns.
+    * The approx side is filtered to the panel here; that modulo filter
+    * pushes through the tier's rank window (query_id is the partition
+    * key) into its candidate join, so a gate never runs the full
+    * self-kNN (PlanSpec pins it).
+    */
+  private def recallAt(exact: DataFrame, approx: DataFrame, mod: Int,
+                       k: Int): DataFrame = {
+    val hits = approx.where(col("query_id") % mod === 0)
+      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
+    exact.select(col("query_id"), col("neighbor_id"))
+      .join(hits, Seq("query_id", "neighbor_id"), "left_outer")
+      .groupBy(col("query_id"))
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"))
+      .selectExpr("query_id", "hits", s"cast(hits as double) / $k as recall")
+      .orderBy(col("query_id"))
+  }
+
+  /** Exact cosine of surviving `(query_id, neighbor_id)` pairs, as a
+    * `cosine` column. The candidate and rank stages of the quantized
+    * and LSH tiers carry ids (or codes) only; full vectors re-attach
+    * here for the survivors — broadcast while the corpus is at most
+    * 100 k vectors (≈50 MB), shuffled equi-joins beyond.
+    */
+  private def survivorCosine(pairs: DataFrame, e: DataFrame,
+                             n: Long): DataFrame = {
+    def side(d: DataFrame): DataFrame = if (n <= 100000L) broadcast(d) else d
+    pairs
+      .join(side(e.select(col("vec_id").as("query_id"), col("v").as("qv"),
+        col("nrm").as("qn"))), "query_id")
+      .join(side(e.select(col("vec_id").as("neighbor_id"), col("v").as("cv"),
+        col("nrm").as("cn"))), "neighbor_id")
+      .withColumn("cosine", expr(cosine("qv", "cv", "qn", "cn")))
+      .drop("qv", "qn", "cv", "cn")
   }
 
   def similarityTopKOracle(k: Int = 10, sampleMod: Int = -1): String = {
@@ -252,18 +323,12 @@ object Similarity {
     */
   private def ivfRanked(spark: SparkSession, sfDir: String,
                         nCentroids: Int, nProbe: Int): DataFrame = {
-    import spark.implicits._
-    val c = if (nCentroids > 0) nCentroids
-            else autoCentroids(nVecs(spark, sfDir))
-    val np = if (nProbe > 0) nProbe else autoNProbe(c)
-    val e = vectors(spark, sfDir)
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
+    val (e, cent, np) = seededIvf(spark, sfDir, nCentroids, nProbe)
     ivfRankedFrom(e, cent, np)
   }
 
-  /** [[ivfRanked]] WITHOUT the vector payload — `(vec_id, cell, csim,
-    * crk)` only, same scoring, same checkpoint. The wide form
+  /** [[ivfRanked]] WITHOUT the vector payload — `(vec_id, cell, crk,
+    * csim)` only, same scoring, same checkpoint. The wide form
     * materializes nProbe replicas of every vector (a 63×-at-sf10 write
     * amplification its consumers need because they join pairs in
     * place); a consumer that only needs the CELL GEOMETRY — the capped
@@ -272,23 +337,29 @@ object Similarity {
     */
   private def ivfRankedNarrow(spark: SparkSession, sfDir: String,
                               nCentroids: Int, nProbe: Int): DataFrame = {
-    import spark.implicits._
+    val (e, cent, np) = seededIvf(spark, sfDir, nCentroids, nProbe)
+    ivfRankedFrom(e, cent, np, keep = Seq("vec_id"))
+  }
+
+  /** The seeded IVF geometry every seeded-index tier starts from: the
+    * corpus vectors, the first-C centroid table ([[seededCentroids]])
+    * and the probe width, each explicit or resolved from the corpus
+    * size ([[autoCentroids]] / [[autoNProbe]]). */
+  private def seededIvf(spark: SparkSession, sfDir: String,
+                        nCentroids: Int, nProbe: Int)
+      : (DataFrame, DataFrame, Int) = {
     val c = if (nCentroids > 0) nCentroids
             else autoCentroids(nVecs(spark, sfDir))
-    val np = if (nProbe > 0) nProbe else autoNProbe(c)
     val e = vectors(spark, sfDir)
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
-    // tracked checkpoint: plain localCheckpoint outside a bracket;
-    // inside a foreachBatch bracket the block is swept per micro-batch
-    graft.streaming.BlockHygiene.checkpointTracked(
-      e.crossJoin(flatCentRow(cent))
-        .selectExpr("vec_id",
-          s"posexplode(ivf_top_cells(v, nrm, cflat, cnorms, cids, $np)) " +
-            "as (p0, tc)")
-        .selectExpr("vec_id", "tc.cell as cell", "tc.csim as csim",
-          "cast(p0 + 1 as int) as crk"))
+    (e, seededCentroids(e, c), if (nProbe > 0) nProbe else autoNProbe(c))
   }
+
+  /** The first C vectors as the `(cent_id, centv, centn)` centroid
+    * table — deterministic and broadcastable. */
+  private def seededCentroids(e: DataFrame, c: Int): DataFrame =
+    e.where(col("vec_id") < c)
+      .select(col("vec_id").as("cent_id"), col("v").as("centv"),
+        col("nrm").as("centn"))
 
   /** One-row broadcastable flattening of a centroid table — the
     * [[graft.functions.GraftExpressions.IvfTopCells]] operand:
@@ -318,21 +389,25 @@ object Similarity {
     * the broadcast flattened matrix; `posexplode` emits the np ranked
     * rows narrowly, bit-identical by construction (same dot fold, same
     * csim arithmetic, same sort semantics — PropertySpec pins it, and
-    * every IVF-family DuckDB oracle replays unchanged).
+    * every IVF-family DuckDB oracle replays unchanged). `keep` names
+    * the input columns each ranked row carries: the full vector by
+    * default, the id alone for [[ivfRankedNarrow]], quantized codes
+    * for [[similaritySq8]].
     */
   private[textops] def ivfRankedFrom(e: DataFrame, cent: DataFrame,
-                            nProbe: Int): DataFrame = {
+                                     nProbe: Int,
+                                     keep: Seq[String] = Seq("vec_id", "v", "nrm"))
+      : DataFrame = {
     // tracked checkpoint: identical to localCheckpoint for batch
     // callers, but a streaming foreachBatch bracket (annSearchStream,
     // the embedding-dedup crawl loop) sweeps the block per micro-batch
     // instead of leaking one per batch for the life of the stream
     graft.streaming.BlockHygiene.checkpointTracked(
       e.crossJoin(flatCentRow(cent))
-        .selectExpr("vec_id", "v", "nrm",
-          s"posexplode(ivf_top_cells(v, nrm, cflat, cnorms, cids, $nProbe)) " +
-            "as (p0, tc)")
-        .selectExpr("vec_id", "v", "nrm", "tc.cell as cell",
-          "cast(p0 + 1 as int) as crk", "tc.csim as csim"))
+        .selectExpr(keep :+ (s"posexplode(ivf_top_cells(v, nrm, cflat, " +
+          s"cnorms, cids, $nProbe)) as (p0, tc)"): _*)
+        .selectExpr(keep ++ Seq("tc.cell as cell",
+          "cast(p0 + 1 as int) as crk", "tc.csim as csim"): _*))
   }
 
   /** The persistable IVF serving index: (centroid table, cell-assigned
@@ -342,11 +417,7 @@ object Similarity {
                                        nCentroids: Int = -1)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
-    val c = if (nCentroids > 0) nCentroids
-            else autoCentroids(nVecs(spark, sfDir))
-    val e = vectors(spark, sfDir)
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
+    val (e, cent, _) = seededIvf(spark, sfDir, nCentroids, 1)
     val assign = ivfRankedFrom(e, cent, 1)
       .select($"vec_id", $"v", $"nrm", $"cell")
     (cent, assign)
@@ -370,9 +441,7 @@ object Similarity {
                                       c: Int, rounds: Int): DataFrame = {
     import spark.implicits._
     val e = vectors(spark, sfDir)
-    var cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
-      .localCheckpoint()
+    var cent = seededCentroids(e, c).localCheckpoint()
     for (_ <- 1 to rounds) {
       // fused argmax assignment (np = 1): no n·C rows, no rank window —
       // the same bit-exact order as the windowed form (ivfRankedFrom)
@@ -396,8 +465,7 @@ object Similarity {
       cent = cent.select($"cent_id", $"centv".as("oldv"))
         .join(means, Seq("cent_id"), "left")
         .selectExpr("cent_id", "coalesce(newv, oldv) as centv")
-        .selectExpr("cent_id", "centv",
-          s"sqrt(${dotSpark("centv", "centv", "cn")}) as centn")
+        .selectExpr("cent_id", "centv", s"${norm("centv")} as centn")
         .localCheckpoint()
     }
     cent
@@ -412,26 +480,28 @@ object Similarity {
   def similarityIvfTrained(spark: SparkSession, sfDir: String, k: Int = 5,
                            nCentroids: Int = -1, nProbe: Int = -1,
                            rounds: Int = 2): DataFrame = {
-    import spark.implicits._
     val c = if (nCentroids > 0) nCentroids
             else autoCentroids(nVecs(spark, sfDir))
     val np = if (nProbe > 0) nProbe else autoNProbe(c)
-    val ranked = ivfRankedFrom(vectors(spark, sfDir),
-      trainedCentroids(spark, sfDir, c, rounds), np)
-    val assign = ranked.where($"crk" === 1)
-      .select($"vec_id", $"v", $"nrm", $"cell")
-    val probes = ranked
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"),
-        $"cell")
-    probes.join(assign, "cell")
-      .where($"query_id" =!= $"vec_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "v", "d")} / (qn * nrm)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
+    ivfTopK(ivfRankedFrom(vectors(spark, sfDir),
+      trainedCentroids(spark, sfDir, c, rounds), np), k)
+  }
+
+  /** IVF serve over a ranked index: every probe row `(query, cell)`
+    * joins the vectors assigned to that cell (crk = 1), candidates are
+    * scored by exact cosine and ranked ([[rankTopK]]) — shared by the
+    * seeded and trained indexes. */
+  private def ivfTopK(ranked: DataFrame, k: Int): DataFrame = {
+    val assign = ranked.where(col("crk") === 1)
+      .select(col("vec_id").as("neighbor_id"), col("v"), col("nrm"), col("cell"))
+    // the index is already cut to the nProbe head — every row is a probe
+    val probes = ranked.select(col("vec_id").as("query_id"), col("v").as("qv"),
+      col("nrm").as("qn"), col("cell"))
+    rankTopK(probes.join(assign, "cell")
+      .where(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        expr(cosine("qv", "v", "qn", "nrm")).as("cosine")), k)
+      .orderBy(col("query_id"), col("rnk"))
   }
 
   /** Embedding-cosine near-duplicate pairs: (v1 < v2) with
@@ -459,7 +529,7 @@ object Similarity {
       .where($"qid" =!= $"vec_id")
       .select(least($"qid", $"vec_id").as("vec1"),
         greatest($"qid", $"vec_id").as("vec2"),
-        expr(s"${dotSpark("qv", "v", "d")} / (qn * nrm)").as("cosine"))
+        expr(cosine("qv", "v", "qn", "nrm")).as("cosine"))
       .where($"cosine" >= threshold)
       .distinct()
       .orderBy($"vec1", $"vec2")
@@ -577,7 +647,7 @@ object Similarity {
       .where($"qid" =!= $"vec_id")
       .select(least($"qid", $"vec_id").as("vec1"),
         greatest($"qid", $"vec_id").as("vec2"),
-        expr(s"${dotSpark("qv", "v", "d")} / (qn * nrm)").as("cosine"))
+        expr(cosine("qv", "v", "qn", "nrm")).as("cosine"))
       .where($"cosine" >= threshold)
       .distinct()
   }
@@ -695,7 +765,7 @@ object Similarity {
         "vec1")
       .join(e.select($"vec_id".as("vec2"), $"v".as("v2"), $"nrm".as("m2")),
         "vec2")
-      .withColumn("cosine", expr(s"${dotSpark("v1", "v2", "cv")} / (m1 * m2)"))
+      .withColumn("cosine", expr(cosine("v1", "v2", "m1", "m2")))
       .select($"lvl", $"cosine")
     val agg = scored
       .withColumn("l", explode(array((1 to 4).map(lit(_)): _*)))
@@ -919,7 +989,7 @@ object Similarity {
     val matches = probes.join(assign, "cell")
       .where($"qid" =!= $"oid" && (!$"o_new" || $"oid" < $"qid"))
       .select($"qid", $"oid",
-        expr(s"${dotSpark("qv", "ov", "d")} / (qn * onrm)").as("cosine"))
+        expr(cosine("qv", "ov", "qn", "onrm")).as("cosine"))
       .where($"cosine" >= threshold)
       .distinct()
     val best = matches
@@ -1014,14 +1084,14 @@ object Similarity {
                                threshold: Double = 0.4,
                                evalMod: Int = -1): DataFrame = {
     import spark.implicits._
-    val mod = if (evalMod > 0) evalMod else autoSampleMod(nVecs(spark, sfDir))
+    val mod = panelMod(spark, sfDir, evalMod)
     val e = vectors(spark, sfDir)
     val eval = e.where($"vec_id" % mod === 0)
       .select($"vec_id".as("eval_id"), $"v".as("evv"), $"nrm".as("en"))
     val train = e.where($"vec_id" % mod =!= 0)
       .select($"vec_id".as("train_id"), $"v".as("tv"), $"nrm".as("tn2"))
     train.join(broadcast(eval), expr("true"))
-      .withColumn("cosine", expr(s"${dotSpark("tv", "evv", "d")} / (tn2 * en)"))
+      .withColumn("cosine", expr(cosine("tv", "evv", "tn2", "en")))
       .groupBy($"train_id")
       .agg(max(struct($"cosine", (-$"eval_id").as("neg_eval"))).as("best"))
       .select($"train_id", (-$"best.neg_eval").as("eval_id"),
@@ -1064,9 +1134,9 @@ object Similarity {
     * matrix carry most of the trace. Deployment rule: run this once
     * per corpus; if share(top-4 eigenvalues) ≫ 4/64 (the isotropic
     * floor — per-tier measurements in BASELINE's spectrum table,
-    * `tools.SpectrumProbe`), build the trained/residual IVFADC index
-    * ([[graft.textops.Pipelines]] `materializePq` residual=true);
-    * else spend the same budget on a wider re-rank pool. Eigenvalues come from the driver-side 64×64
+    * `tools.SpectrumProbe`), a trained/residual IVFADC codebook pays;
+    * else spend the same budget on a wider re-rank pool. Eigenvalues
+    * come from the driver-side 64×64
     * Jacobi pass ([[spectrumShares]] / `tools.SpectrumProbe`) — the
     * QUERY stays a single bounded partial aggregate so the gate is a
     * hash match: per dimension pair (i ≤ j), exact integer micro-unit
@@ -1323,25 +1393,8 @@ object Similarity {
     * per query from the probed cells.
     */
   def similarityIvf(spark: SparkSession, sfDir: String, k: Int = 5,
-                    nCentroids: Int = -1, nProbe: Int = -1): DataFrame = {
-    import spark.implicits._
-    val ranked = ivfRanked(spark, sfDir, nCentroids, nProbe)
-    // cell assignment = rank-1 row; probes = all nProbe rows
-    val assign = ranked.where($"crk" === 1)
-      .select($"vec_id", $"v", $"nrm", $"cell")
-    val probes = ranked
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"),
-        $"cell")
-    probes.join(assign, "cell")
-      .where($"query_id" =!= $"vec_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "v", "d")} / (qn * nrm)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"vec_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"cosine",
-        $"rnk".cast("int").as("rnk"))
-      .orderBy($"query_id", $"rnk")
-  }
+                    nCentroids: Int = -1, nProbe: Int = -1): DataFrame =
+    ivfTopK(ivfRanked(spark, sfDir, nCentroids, nProbe), k)
 
   val similarityIvfOracle: String =
     s"""WITH $geomCte, e AS (
@@ -1546,36 +1599,21 @@ object Similarity {
                     nCentroids: Int = -1, nProbe: Int = -1): DataFrame = {
     import spark.implicits._
     val n = nVecs(spark, sfDir)
-    val c = if (nCentroids > 0) nCentroids else autoCentroids(n)
-    val np = if (nProbe > 0) nProbe else autoNProbe(c)
-    val e = vectors(spark, sfDir)
-    val cent = e.where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
-    // Round 18 (guide §8): the old form rode the FULL vector (and
-    // computed the quantization lambdas once per join branch) through
-    // the cell join and the rank window, because the exact re-rank
-    // cosine was computed before the rank filter pruned anything:
-    // ~1M candidate rows × (v + q on both sides) at sf0.1 fed the
-    // WindowGroupLimit's partial sort. The candidate RANKING only
-    // needs the quantized codes — that is the point of SQ8 — so:
-    // quantize scan-side, checkpoint (vec_id, nrm, s, q, cell, crk)
-    // with no full vector (same floor/127 arithmetic, computed once),
-    // rank on the approx score, and re-attach the full vectors for the
-    // ≤ n·k SURVIVORS only (broadcast below ~100 k vectors, shuffled
-    // equi-joins beyond — the verifyIntersect flip). The approx score,
-    // the window spec, and the exact cosine expression are unchanged,
-    // so the output is bit-identical.
-    val qtab = graft.streaming.BlockHygiene.checkpointTracked(
+    val (e, cent, np) = seededIvf(spark, sfDir,
+      if (nCentroids > 0) nCentroids else autoCentroids(n), nProbe)
+    // The candidate RANKING needs only the quantized codes — that is
+    // the point of SQ8 — so the index checkpoints (vec_id, nrm, s, q)
+    // per probe row with no full vector (quantized once, scan-side),
+    // ranks on the approx score, and re-attaches full vectors for the
+    // ≤ n·k survivors only ([[survivorCosine]]). Carrying the vectors
+    // through the cell join fed ~1M candidate rows × (v + q on both
+    // sides) into the rank window's partial sort at sf0.1.
+    val qtab = ivfRankedFrom(
       e.selectExpr("vec_id", "nrm", "v",
           "array_max(transform(v, xa -> abs(xa))) as s")
         .selectExpr("vec_id", "nrm", "v", "s",
-          "cast(transform(v, xq -> floor((xq * 127D) / s)) as array<double>) as q")
-        .crossJoin(flatCentRow(cent))
-        .selectExpr("vec_id", "nrm", "s", "q",
-          s"posexplode(ivf_top_cells(v, nrm, cflat, cnorms, cids, $np)) " +
-            "as (p0, tc)")
-        .selectExpr("vec_id", "nrm", "s", "q", "tc.cell as cell",
-          "cast(p0 + 1 as int) as crk"))
+          "cast(transform(v, xq -> floor((xq * 127D) / s)) as array<double>) as q"),
+      cent, np, keep = Seq("vec_id", "nrm", "s", "q"))
     val assign = qtab.where($"crk" === 1)
       .select($"vec_id", $"nrm", $"s", $"q", $"cell")
     val probes = qtab
@@ -1584,20 +1622,12 @@ object Similarity {
     val survivors = probes.join(assign, "cell")
       .where($"query_id" =!= $"vec_id")
       .withColumn("approx_cosine",
-        expr(s"(${dotSpark("qq", "q", "i")} * (qs * s)) / ((qn * nrm) * 16129D)"))
+        expr("(vec_dot(qq, q) * (qs * s)) / ((qn * nrm) * 16129D)"))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"approx_cosine".desc, $"vec_id".asc)))
       .where($"rnk" <= k)
-      .select($"query_id", $"vec_id".as("neighbor_id"), $"approx_cosine",
-        $"qn", $"nrm", $"rnk")
-    val qvs = e.select($"vec_id".as("query_id"), $"v".as("qv"))
-    val cvs = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"))
-    val small = n <= 100000L
-    survivors
-      .join(if (small) broadcast(qvs) else qvs, "query_id")
-      .join(if (small) broadcast(cvs) else cvs, "neighbor_id")
-      // exact re-rank column: full-precision cosine for survivors only
-      .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * nrm)"))
+      .select($"query_id", $"vec_id".as("neighbor_id"), $"approx_cosine", $"rnk")
+    survivorCosine(survivors, e, n)
       .select($"query_id", $"neighbor_id", $"approx_cosine",
         $"cosine", $"rnk".cast("int").as("rnk"))
       .orderBy($"query_id", $"rnk")
@@ -1660,9 +1690,9 @@ object Similarity {
   private val PqSub = 8   // = 64 / PqM
   private val PqK = 16
 
-  /** Fixed-layout subvector slice list — shared by the index build
-    * ([[pqIndex]]) and the serve-time query LUT ([[pqLutFor]]) so the
-    * two sides can never disagree on the subspace geometry. */
+  /** Fixed-layout subvector slice list — one expression feeds both the
+    * encode side and the query-LUT side of [[pqIndex]], so the two can
+    * never disagree on the subspace geometry. */
   private val pqSlices: String = (0 until PqM)
     .map(j => s"slice(v, ${j * PqSub + 1}, $PqSub)")
     .mkString("array(", ", ", ")")
@@ -1707,10 +1737,10 @@ object Similarity {
       .localCheckpoint()
     val cent = vsub.where($"vec_id" < PqK)
       .selectExpr("j", "vec_id as cent_id", "subv as centv",
-        s"${dotSpark("subv", "subv", "pc")} / 2D as cn2h")
+        "vec_dot(subv, subv) / 2D as cn2h")
       .localCheckpoint()
     val codes = vsub.join(broadcast(cent), "j")
-      .withColumn("score", expr(s"${dotSpark("subv", "centv", "pe")} - cn2h"))
+      .withColumn("score", expr("vec_dot(subv, centv) - cn2h"))
       .withColumn("erk", row_number().over(
         Window.partitionBy($"vec_id", $"j")
           .orderBy($"score".desc, $"cent_id".asc)))
@@ -1718,171 +1748,31 @@ object Similarity {
       .select($"vec_id", $"j", $"cent_id".as("code"))
     val lut = vsub.join(broadcast(cent), "j")
       .selectExpr("vec_id as query_id", "j", "cent_id as code",
-        s"cast(floor(${dotSpark("subv", "centv", "pl")} * 1000000000D) as bigint) as pdot_q")
+        "cast(floor(vec_dot(subv, centv) * 1000000000D) as bigint) as pdot_q")
     (ranked, cent, codes, lut)
   }
 
   /** Pack per-(vector, subspace) code rows into the fixed-layout array
     * [[pqAdcExpr]] indexes: (vec_id, codes[PqM]). */
-  private[textops] def packPqCodes(codes: DataFrame): DataFrame =
+  private def packPqCodes(codes: DataFrame): DataFrame =
     codes.groupBy(col("vec_id"))
       .agg(sort_array(collect_list(struct(col("j"), col("code")))).as("cs"))
       .selectExpr("vec_id", "transform(cs, s -> s.code) as codes")
 
   /** Pack per-(query, subspace, code) LUT rows into the (j, code)-
     * ordered array [[pqAdcExpr]] indexes: (query_id, lut[PqM·PqK]). */
-  private[textops] def packPqLut(lut: DataFrame): DataFrame =
+  private def packPqLut(lut: DataFrame): DataFrame =
     lut.groupBy(col("query_id"))
       .agg(sort_array(collect_list(struct(col("j"), col("code"), col("pdot_q"))))
         .as("ls"))
       .selectExpr("query_id", "transform(ls, s -> s.pdot_q) as lut")
 
-  /** The per-query ADC lookup table against an arbitrary (possibly
-    * stored) codebook: queries `(query_id, v)` dot their subvectors
-    * against every codebook entry ONCE — O(PqM·PqK) rows per query,
-    * never a candidate vector — with the same 1e-9 floor quantization
-    * as the index build's LUT, so a stored-snapshot serve
-    * ([[graft.textops.Pipelines.annSearchPqFrom]]) scores
-    * bit-identically to the live [[similarityPq]]. */
-  private[textops] def pqLutFor(queries: DataFrame, cb: DataFrame): DataFrame =
-    packPqLut(queries
-      .selectExpr("query_id as vec_id", "v")
-      .selectExpr("vec_id", s"posexplode($pqSlices) as (j, subv)")
-      .join(broadcast(cb), "j")
-      .selectExpr("vec_id as query_id", "j", "cent_id as code",
-        s"cast(floor(${dotSpark("subv", "centv", "pl")} * 1000000000D) as bigint) as pdot_q"))
-
-  /** ADC over the packed arrays for a k-entry codebook:
-    * Σ_j lut[j·k + codes[j]] — fixed expression order, BIGINT adds,
-    * identical fold in the DuckDB oracle. The stride k must match the
-    * codebook the LUT was packed against ([[pqCodebookK]] reads it off
-    * a stored codebook). */
-  private[textops] def pqAdcExprFor(k: Int): String = (0 until PqM)
-    .map(j => s"element_at(lut, cast(element_at(codes, ${j + 1}) + ${j * k + 1} as int))")
+  /** ADC over the packed arrays: Σ_j lut[j·PqK + codes[j]] — fixed
+    * expression order, BIGINT adds, identical fold in the DuckDB
+    * oracle. */
+  private val pqAdcExpr: String = (0 until PqM)
+    .map(j => s"element_at(lut, cast(element_at(codes, ${j + 1}) + ${j * PqK + 1} as int))")
     .mkString(" + ")
-
-  /** The live tier's ADC expression (PqK-entry stride). */
-  private[textops] val pqAdcExpr: String = pqAdcExprFor(PqK)
-
-  /** Entries per subspace of a codebook frame (PqM·k rows total). */
-  private[textops] def pqCodebookK(cb: DataFrame): Int =
-    (cb.count() / PqM).toInt
-
-  /** The live tier's codebook capacity, for snapshot builders that
-    * take an override but default to the oracle-replayable geometry. */
-  private[textops] val PqKDefault: Int = PqK
-
-  /** The seeded IVF centroid table alone — what the stored-index
-    * builders snapshot as `ann_centroids` without paying the full
-    * assign pass. */
-  private[textops] def ivfCentroids(spark: SparkSession, sfDir: String)
-      : DataFrame = {
-    import spark.implicits._
-    val c = autoCentroids(nVecs(spark, sfDir))
-    vectors(spark, sfDir).where($"vec_id" < c)
-      .select($"vec_id".as("cent_id"), $"v".as("centv"), $"nrm".as("centn"))
-  }
-
-  /** Encode vectors `(vec_id, v)` against an arbitrary (possibly
-    * trained, possibly stored) PQ codebook — per subspace, the code of
-    * the best entry by the same dot − ‖c‖²/2 rule [[pqIndex]] uses, so
-    * seeded-codebook output is bit-identical to the inline build's. */
-  private[textops] def pqEncode(vecs: DataFrame, cb: DataFrame): DataFrame =
-    vecs.selectExpr("vec_id", s"posexplode($pqSlices) as (j, subv)")
-      .join(broadcast(cb), "j")
-      .withColumn("score", expr(s"${dotSpark("subv", "centv", "pe")} - cn2h"))
-      .withColumn("erk", row_number().over(
-        Window.partitionBy(col("vec_id"), col("j"))
-          .orderBy(col("score").desc, col("cent_id").asc)))
-      .where(col("erk") === 1)
-      .select(col("vec_id"), col("j"), col("cent_id").as("code"))
-
-  /** Corpus-total best encoder score Σ_(vec,j) max(dot − ‖c‖²/2)
-    * under a codebook — a monotone proxy for NEGATIVE total L2
-    * quantization error (error = Σ‖subv‖² − 2·Σ best, and the first
-    * term is codebook-independent). Exposed for the Lloyd
-    * non-regression spec: trained score must be ≥ seeded. */
-  private[graft] def pqQuantScore(spark: SparkSession, sfDir: String,
-                                  cb: DataFrame): Double = {
-    import spark.implicits._
-    vectors(spark, sfDir)
-      .selectExpr("vec_id", s"posexplode($pqSlices) as (j, subv)")
-      .join(broadcast(cb), "j")
-      .withColumn("score", expr(s"${dotSpark("subv", "centv", "pq")} - cn2h"))
-      .groupBy($"vec_id", $"j").agg(max($"score").as("best"))
-      .agg(sum($"best")).head().getDouble(0)
-  }
-
-  /** Per-subspace Lloyd-trained PQ codebook with `k` entries — the
-    * FAISS `train()` step the seeded tier skips. Same engine-exact
-    * recipe as [[trainedCentroids]]: assign every (vector, subspace)
-    * row to its best entry by the encoder's own dot − ‖c‖²/2 rule,
-    * re-center per (j, code) in floor(1e6) BIGINT micro-units
-    * (order-independent sums, one fixed divide order), fixed `rounds`
-    * iterations, empty codes keep their entry. Seeded by the first
-    * `k` vectors' subvectors, so rounds = 0 yields the seeded
-    * k-entry codebook. Scale shape: each round is one broadcast
-    * assign pass over the n·PqM subspace rows plus an O(PqM·k·PqSub)
-    * partial-aggregated re-center — the codebook stays
-    * corpus-size-independent and broadcastable throughout. Measured
-    * caveat (BASELINE PQ addendum): on the synthetic clustered data
-    * neither training, k=64, nor the residual (IVFADC) build fixes
-    * in-cluster ADC discrimination — the within-cluster structure
-    * there is isotropic noise no 32-bit code can rank, so ADC selects
-    * candidate pools and a wide-pool exact re-rank assigns ranks. */
-  private[graft] def pqTrainedCodebook(spark: SparkSession, sfDir: String,
-                                       rounds: Int = 2,
-                                       k: Int = PqK): DataFrame =
-    pqTrainedCodebookFrom(
-      vectors(spark, sfDir).select(col("vec_id"), col("v")), rounds, k)
-
-  /** [[pqTrainedCodebook]] over an arbitrary `(vec_id, v)` frame —
-    * the residual-encoding build ([[graft.textops.Pipelines
-    * .materializePq]] with `residual = true`) trains on r = v − cell
-    * centroid instead of the raw corpus. */
-  private[textops] def pqTrainedCodebookFrom(vecs: DataFrame, rounds: Int,
-                                             k: Int): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val vsub = vecs
-      .selectExpr("vec_id", s"posexplode($pqSlices) as (j, subv)")
-      .localCheckpoint()
-    // seeds are the [0, k) id window — callers that want a different
-    // seed population remap ids first (the residual build shifts by
-    // −C so cell-seed vectors, whose residuals are zero, fall below
-    // the window instead of inside it), so the lower bound matters
-    var cent = vsub.where($"vec_id" >= 0 && $"vec_id" < k)
-      .selectExpr("j", "vec_id as cent_id", "subv as centv",
-        s"${dotSpark("subv", "subv", "pc")} / 2D as cn2h")
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val assigned = vsub.join(broadcast(cent), "j")
-        .withColumn("score", expr(s"${dotSpark("subv", "centv", "pt")} - cn2h"))
-        .withColumn("erk", row_number().over(
-          Window.partitionBy($"vec_id", $"j")
-            .orderBy($"score".desc, $"cent_id".asc)))
-        .where($"erk" === 1)
-        .select($"j", $"cent_id", $"subv")
-      val means = assigned
-        .select($"j", $"cent_id", posexplode($"subv"))
-        .selectExpr("j", "cent_id", "cast(pos as int) as dim",
-          "cast(floor(col * 1000000) as bigint) as micro")
-        .groupBy($"j", $"cent_id", $"dim")
-        .agg(sum($"micro").as("sq"), count(lit(1)).as("cnt"))
-        .selectExpr("j", "cent_id", "dim",
-          "cast(sq as double) / cnt / 1000000.0 as m")
-        .groupBy($"j", $"cent_id")
-        .agg(expr("transform(array_sort(collect_list(struct(dim, m))), cs -> cs.m)")
-          .as("newv"))
-      cent = cent.select($"j", $"cent_id", $"centv".as("oldv"))
-        .join(means, Seq("j", "cent_id"), "left")
-        .selectExpr("j", "cent_id", "coalesce(newv, oldv) as centv")
-        .selectExpr("j", "cent_id", "centv",
-          s"${dotSpark("centv", "centv", "pc")} / 2D as cn2h")
-        .localCheckpoint()
-    }
-    cent
-  }
 
   def similarityPq(spark: SparkSession, sfDir: String, k: Int = 5,
                    nCentroids: Int = -1, nProbe: Int = -1): DataFrame = {
@@ -1919,7 +1809,7 @@ object Similarity {
         Window.partitionBy($"query_id")
           .orderBy($"approx_cosine".desc, $"vec_id".asc)))
       .where($"rnk" <= k)
-      .withColumn("cosine", expr(s"${dotSpark("qv", "v", "d")} / (qn * nrm)"))
+      .withColumn("cosine", expr(cosine("qv", "v", "qn", "nrm")))
       .select($"query_id", $"vec_id".as("neighbor_id"), $"approx_cosine",
         $"cosine", $"rnk".cast("int").as("rnk"))
       .orderBy($"query_id", $"rnk")
@@ -2012,27 +1902,9 @@ object Similarity {
     * no quality signal. */
   def similarityRecallPq(spark: SparkSession, sfDir: String, k: Int = 5,
                          sampleMod: Int = -1): DataFrame = {
-    import spark.implicits._
-    val mod = if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
-    val e = vectors(spark, sfDir)
-    val q = e.where($"vec_id" % mod === 0)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val exact = q.join(c, $"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"neighbor_id")
-    val approx = similarityPq(spark, sfDir, k)
-      .where($"query_id" % mod === 0)
-      .select($"query_id", $"neighbor_id", lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left_outer")
-      .groupBy($"query_id")
-      .agg(sum(coalesce($"hit", lit(0L))).as("hits"))
-      .selectExpr("query_id", "hits",
-        s"cast(hits as double) / $k as recall")
-      .orderBy($"query_id")
+    val mod = panelMod(spark, sfDir, sampleMod)
+    recallAt(exactTopK(spark, sfDir, k, mod), similarityPq(spark, sfDir, k),
+      mod, k)
   }
 
   def similarityRecallPqOracle(k: Int = 5, sampleMod: Int = -1): String = {
@@ -2241,7 +2113,7 @@ object Similarity {
       .agg(expr("transform(array_sort(collect_list(struct(dim, centroid))), cp -> cp.centroid)")
         .as("centv"))
       .selectExpr("label", "centv",
-        s"sqrt(${dotSpark("centv", "centv", "oc")}) as centn")
+        s"${norm("centv")} as centn")
   }
 
   def embeddingOutliers(spark: SparkSession, sfDir: String,
@@ -2251,9 +2123,9 @@ object Similarity {
     Tables.embeddings(spark, sfDir)
       .selectExpr("vec_id", "label", "cast(embedding as array<double>) as v")
       .selectExpr("vec_id", "label", "v",
-        s"sqrt(${dotSpark("v", "v", "ov")}) as nrm")
+        s"${norm("v")} as nrm")
       .join(broadcast(cent), "label")
-      .withColumn("proto_cos", expr(s"${dotSpark("v", "centv", "op")} / (nrm * centn)"))
+      .withColumn("proto_cos", expr(cosine("v", "centv", "nrm", "centn")))
       .withColumn("n_label", count(lit(1)).over(Window.partitionBy($"label")))
       .withColumn("rnk", row_number().over(
         Window.partitionBy($"label").orderBy($"proto_cos".asc, $"vec_id".asc)))
@@ -2311,28 +2183,10 @@ object Similarity {
                        nCentroids: Int = -1, nProbe: Int = -1,
                        sampleMod: Int = -1,
                        trained: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val mod = if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
-    val e = vectors(spark, sfDir)
-    val q = e.where($"vec_id" % mod === 0)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val exact = q.join(c, $"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"neighbor_id")
-    val approx = (if (trained) similarityIvfTrained(spark, sfDir, k, nCentroids, nProbe)
-                  else similarityIvf(spark, sfDir, k, nCentroids, nProbe))
-      .where($"query_id" % mod === 0)
-      .select($"query_id", $"neighbor_id", lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left_outer")
-      .groupBy($"query_id")
-      .agg(sum(coalesce($"hit", lit(0L))).as("hits"))
-      .selectExpr("query_id", "hits",
-        s"cast(hits as double) / $k as recall")
-      .orderBy($"query_id")
+    val mod = panelMod(spark, sfDir, sampleMod)
+    recallAt(exactTopK(spark, sfDir, k, mod),
+      if (trained) similarityIvfTrained(spark, sfDir, k, nCentroids, nProbe)
+      else similarityIvf(spark, sfDir, k, nCentroids, nProbe), mod, k)
   }
 
   def similarityRecallOracle(k: Int = 5, nCentroids: Int = -1,
@@ -2416,23 +2270,14 @@ object Similarity {
     val e = vectors(spark, sfDir)
     val stackExpr = (0 until tables)
       .map(t => s"$t, ${lshSigSpark(t, b)}").mkString(", ")
-    // Signatures are computed SCAN-SIDE and the 64-double vector is
-    // dropped before any exchange (round 18, guide §2.3/§8: shuffle
-    // keys, not payloads): the bucket join used to carry qv/cv through
-    // both sides — the multiprobe query side alone shipped
-    // n·L·(b+1) ≈ 140 k vector-bearing rows (~70 MB at sf0.1) through
-    // the (tbl, sig) exchange to produce a candidate set whose identity
-    // needs only (tbl, sig, vec_id). The pair distinct is now 2 longs
-    // per row (the round-15 "score first" rule targeted a distinct
-    // that still carried vectors; with narrow bucket rows,
-    // distinct-then-score strictly dominates: it also scores each
-    // unique pair once instead of the ~1.6× collision-duplicated
-    // stream). Vectors re-attach AFTER the distinct via equi-joins on
-    // the ids — broadcast below ~100 k vectors (≈50 MB), shuffled
-    // equi-joins beyond (the §8 decide-with-small-rows /
-    // attach-payload-once shape). The cosine is the same vec_dot
-    // expression over the same vectors, so scores — and the ranked
-    // output — are bit-identical.
+    // Signatures are computed scan-side and the 64-double vector is
+    // dropped before any exchange: the candidate set's identity needs
+    // only (tbl, sig, vec_id), so the bucket join and the pair distinct
+    // carry two longs per row (vector-bearing bucket rows put ~70 MB
+    // through the (tbl, sig) exchange at sf0.1). Distinct before
+    // scoring also scores each unique pair once instead of the ~1.6×
+    // collision-duplicated stream; vectors re-attach to the distinct
+    // pairs only ([[survivorCosine]]).
     val buckets = e.selectExpr("vec_id",
       s"stack($tables, $stackExpr) as (tbl, sig)")
     val q =
@@ -2450,30 +2295,14 @@ object Similarity {
       .where($"query_id" =!= $"neighbor_id")
       .select($"query_id", $"neighbor_id")
       .distinct()
-    val qv = e.select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val cv = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val small = n <= 100000L
-    pairs
-      .join(if (small) broadcast(qv) else qv, "query_id")
-      .join(if (small) broadcast(cv) else cv, "neighbor_id")
-      .select($"query_id", $"neighbor_id",
-        expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)").as("cosine"))
-  }
-
-  private def lshRankTopK(cand: DataFrame, k: Int): DataFrame = {
-    cand
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("cosine").desc, col("neighbor_id").asc)))
-      .where(col("rnk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"),
-        col("rnk").cast("int").as("rnk"))
-      .orderBy(col("query_id"), col("rnk"))
+    survivorCosine(pairs, e, n)
+      .select($"query_id", $"neighbor_id", $"cosine")
   }
 
   def similarityLsh(spark: SparkSession, sfDir: String, k: Int = 5,
                     tables: Int = LshTables, bits: Int = -1): DataFrame =
-    lshRankTopK(lshCandidates(spark, sfDir, tables, bits, multiprobe = false), k)
+    rankTopK(lshCandidates(spark, sfDir, tables, bits, multiprobe = false), k)
+      .orderBy(col("query_id"), col("rnk"))
 
   /** Multi-probe SRP-LSH top-k — the recall-holding form of
     * [[similarityLsh]] (see [[lshCandidates]] and [[multiprobeCount]]
@@ -2485,7 +2314,8 @@ object Similarity {
     */
   def similarityLshMultiprobe(spark: SparkSession, sfDir: String, k: Int = 5,
                               tables: Int = LshTables, bits: Int = -1): DataFrame =
-    lshRankTopK(lshCandidates(spark, sfDir, tables, bits, multiprobe = true), k)
+    rankTopK(lshCandidates(spark, sfDir, tables, bits, multiprobe = true), k)
+      .orderBy(col("query_id"), col("rnk"))
 
   /** Per-table SRP-LSH bucket-occupancy telemetry — the LSH analog of
     * [[similarityCellStats]] (diagnostic tier, oracled): how a user
@@ -2618,29 +2448,10 @@ object Similarity {
                           sampleMod: Int = -1, tables: Int = LshTables,
                           bits: Int = -1,
                           multiprobe: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val mod = if (sampleMod > 0) sampleMod else autoSampleMod(nVecs(spark, sfDir))
-    val e = vectors(spark, sfDir)
-    val q = e.where($"vec_id" % mod === 0)
-      .select($"vec_id".as("query_id"), $"v".as("qv"), $"nrm".as("qn"))
-    val c = e.select($"vec_id".as("neighbor_id"), $"v".as("cv"), $"nrm".as("cn"))
-    val exact = q.join(c, $"query_id" =!= $"neighbor_id")
-      .withColumn("cosine", expr(s"${dotSpark("qv", "cv", "d")} / (qn * cn)"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cosine".desc, $"neighbor_id".asc)))
-      .where($"rnk" <= k)
-      .select($"query_id", $"neighbor_id")
-    val lsh = if (multiprobe) similarityLshMultiprobe(spark, sfDir, k, tables, bits)
-              else similarityLsh(spark, sfDir, k, tables, bits)
-    val approx = lsh
-      .where($"query_id" % mod === 0)
-      .select($"query_id", $"neighbor_id", lit(1L).as("hit"))
-    exact.join(approx, Seq("query_id", "neighbor_id"), "left_outer")
-      .groupBy($"query_id")
-      .agg(sum(coalesce($"hit", lit(0L))).as("hits"))
-      .selectExpr("query_id", "hits",
-        s"cast(hits as double) / $k as recall")
-      .orderBy($"query_id")
+    val mod = panelMod(spark, sfDir, sampleMod)
+    recallAt(exactTopK(spark, sfDir, k, mod),
+      if (multiprobe) similarityLshMultiprobe(spark, sfDir, k, tables, bits)
+      else similarityLsh(spark, sfDir, k, tables, bits), mod, k)
   }
 
   def similarityRecallLshOracle(k: Int = 5, sampleMod: Int = -1,

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Decade probe for the TS stored-serving paths: the exact top-k scan
   * (`tsSearchFrom` — linear per query by contract) against the PAA
-  * threshold match (`tsMatchPaaFrom` — collision-bucket-bounded), the
-  * ServeDecade convention (fixed 256-query panel, every 97th user,
-  * 3-rep medians, warm pass + inter-rep scrub, snapshot build timed).
+  * threshold match (`tsMatchPaaFrom` — collision-bucket-bounded): a
+  * fixed 256-query panel (every 97th user), 3-rep medians, warm pass +
+  * inter-rep scrub, snapshot build timed.
   *
   * Usage: `tools/run.sh graft.tools.TsServeProbe <sfDir> [<sfDir>...]
   * [panel=256] [reps=3] [qscale=1]` — `qscale` builds the PAA snapshot

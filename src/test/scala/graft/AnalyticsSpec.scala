@@ -796,6 +796,41 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(bad.isEmpty)
   }
 
+  test("similarity_topk: a zero-norm vector reads NULL cosine, not DIVIDE_BY_ZERO; other pairs exact") {
+    // Spark 4's default ANSI `/` raises on a zero divisor even for
+    // doubles; the shared cosine divides with try_divide, which yields
+    // NULL — what the DuckDB oracle's `/` returns. Zero-norm inputs to
+    // the SQ8 quantizer (scale max|v| = 0) and the IVF cell scorer are
+    // not covered here: they belong to the degenerate-input tier.
+    val vecs = Seq(
+      0L -> Seq(0.5f, -1.25f, 2.0f),
+      1L -> Seq(1.0f, 0.0f, -0.75f),
+      2L -> Seq(0.0f, 0.0f, 0.0f),
+      3L -> Seq(-0.3f, 0.9f, 0.1f),
+      4L -> Seq(2.5f, 1.5f, -1.0f))
+    val dir = java.nio.file.Files.createTempDirectory("graftzeronorm").toString
+    vecs.map { case (id, v) => (id, v, 0) }.toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    val got = Similarity.similarityTopK(spark, dir, k = vecs.size, sampleMod = 1)
+      .collect()
+      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id")) ->
+        Option(r.getAs[java.lang.Double]("cosine")).map(_.doubleValue))
+      .toMap
+    assert(got.size == vecs.size * (vecs.size - 1), "not every ordered pair ranked")
+    // the engine's arithmetic: widen to double, left-fold dot, one divide
+    def dot(a: Seq[Double], b: Seq[Double]): Double =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    val v = vecs.toMap.map { case (id, xs) => id -> xs.map(_.toDouble) }
+    for (((q, c), cos) <- got) {
+      if (q == 2L || c == 2L) assert(cos.isEmpty, s"($q, $c) with the zero vector: $cos")
+      else {
+        val want = dot(v(q), v(c)) /
+          (math.sqrt(dot(v(q), v(q))) * math.sqrt(dot(v(c), v(c))))
+        assert(cos.contains(want), s"($q, $c): $cos != $want")
+      }
+    }
+  }
+
   test("similarity_ivf: recall@5 vs brute force is sane (> 0.5)") {
     val exact = Similarity.similarityTopK(spark, sf).where($"rnk" <= 5)
       .select($"query_id", $"neighbor_id")

@@ -228,99 +228,6 @@ class PipelinesSpec extends AnyFunSuite {
     assert(hits.count() == 5, "external query did not return k neighbors")
   }
 
-  test("materialized PQ index: stored ADC probe == live similarity_pq; external queries work") {
-    import graft.textops.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("graftpq").toString
-    Pipelines.materializePq(spark, sf, dir)
-    // replaying the corpus as the query set against stored CODES must
-    // reproduce the live in-memory PQ query's ADC ranking exactly
-    // (live also carries the exact-cosine re-rank column — the stored
-    // serve's contract is the ADC rank, so compare through it)
-    val corpus = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-    assert(rows(Pipelines.annSearchPqFrom(spark, dir, corpus,
-        excludeSelfId = true)) ==
-      rows(Similarity.similarityPq(spark, sf)
-        .select($"query_id", $"neighbor_id", $"approx_cosine", $"rnk")
-        .orderBy($"query_id", $"rnk")))
-    // an EXTERNAL query gets k ADC neighbors from codes alone
-    val external = corpus.limit(1)
-      .selectExpr("cast(1000000 as bigint) as vec_id",
-        "transform(v, x -> x + 0.001d) as v")
-    assert(Pipelines.annSearchPqFrom(spark, dir, external).count() == 5,
-      "external query did not return k ADC neighbors")
-  }
-
-  test("trained PQ codebook: Lloyd non-regression vs seeded; deterministic; serve path codebook-agnostic") {
-    import graft.textops.Similarity
-    // Lloyd rounds must not increase total quantization error — the
-    // encoder-score proxy is monotone in negative error (tiny slack
-    // for the floor(1e6) micro-unit re-centering)
-    val seededScore = Similarity.pqQuantScore(spark, sf,
-      Similarity.pqIndex(spark, sf)._2)
-    val trained = Similarity.pqTrainedCodebook(spark, sf, rounds = 2)
-    assert(Similarity.pqQuantScore(spark, sf, trained) >= seededScore - 1e-3,
-      "training increased the total quantization error")
-    // engine-exact: a re-train reproduces the codebook bit-for-bit
-    val again = Similarity.pqTrainedCodebook(spark, sf, rounds = 2)
-    assert(rows(trained.orderBy($"j", $"cent_id")) ==
-      rows(again.orderBy($"j", $"cent_id")), "training is not deterministic")
-    // the serve path works unchanged on a trained snapshot
-    val dir = java.nio.file.Files.createTempDirectory("graftpqt").toString
-    Pipelines.materializePq(spark, sf, dir, trainRounds = 2)
-    val corpus = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-    val served = Pipelines.annSearchPqFrom(spark, dir, corpus,
-      excludeSelfId = true)
-    assert(served.groupBy($"query_id").count().where($"count" =!= 5).isEmpty,
-      "trained snapshot did not serve k ADC neighbors per query")
-    // capacity override: the serve derives the ADC stride from the
-    // stored codebook itself, so a 64-entry snapshot works unchanged
-    val kdir = java.nio.file.Files.createTempDirectory("graftpqk").toString
-    Pipelines.materializePq(spark, sf, kdir, codebookK = 64)
-    assert(Pipelines.annSearchPqFrom(spark, kdir, corpus,
-        excludeSelfId = true)
-      .groupBy($"query_id").count().where($"count" =!= 5).isEmpty,
-      "64-entry snapshot did not serve k ADC neighbors per query")
-  }
-
-  test("residual PQ snapshot (IVFADC): ADC == dot(q, centroid + recon(residual)); serves k per query") {
-    import org.apache.spark.sql.functions.{collect_list, max, sort_array, struct}
-    val dir = java.nio.file.Files.createTempDirectory("graftpqr").toString
-    Pipelines.materializePq(spark, sf, dir, trainRounds = 2, residual = true)
-    val corpus = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-    val served = Pipelines.annSearchPqFrom(spark, dir, corpus,
-      excludeSelfId = true)
-    assert(served.groupBy($"query_id").count().where($"count" =!= 5).isEmpty,
-      "residual snapshot did not serve k ADC neighbors per query")
-    // score identity: the served approx must equal the cosine of the
-    // query against (cell centroid + codebook reconstruction of the
-    // residual), up to the 8-term 1e-9 LUT floor
-    val cb = spark.read.parquet(s"$dir/pq_codebook")
-    val recon = spark.read.parquet(s"$dir/pq_codes")
-      .selectExpr("vec_id as neighbor_id", "cell",
-        "posexplode(codes) as (j, code)")
-      .join(cb.withColumnRenamed("cent_id", "code"), Seq("j", "code"))
-      .groupBy($"neighbor_id", $"cell")
-      .agg(sort_array(collect_list(struct($"j", $"centv"))).as("sc"))
-      .selectExpr("neighbor_id", "cell",
-        "flatten(transform(sc, s -> s.centv)) as rv")
-    val cent = spark.read.parquet(s"$dir/ann_centroids")
-      .selectExpr("cent_id as cell", "centv")
-    val vecs = corpus.selectExpr("vec_id", "v", "sqrt(vec_dot(v, v)) as nrm")
-    val err = served.join(recon, "neighbor_id")
-      .join(cent, "cell")
-      .join(vecs.selectExpr("vec_id as query_id", "v as qv", "nrm as qn"),
-        "query_id")
-      .join(vecs.selectExpr("vec_id as neighbor_id", "nrm as nn"),
-        "neighbor_id")
-      .selectExpr("abs(approx_cosine - " +
-        "(vec_dot(qv, centv) + vec_dot(qv, rv)) / (qn * nn)) as e")
-      .agg(max($"e")).head().getDouble(0)
-    assert(err < 1e-6, s"residual ADC diverged from reconstruction: $err")
-  }
-
   test("incremental ingest: judge -> ingest -> judge next batch == live replay") {
     import org.apache.spark.sql.functions.{col, expr, lit, pmod}
     val dir = java.nio.file.Files.createTempDirectory("graftingest").toString

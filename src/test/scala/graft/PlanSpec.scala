@@ -19,20 +19,6 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
-  test("annSearchPqFrom: stored ADC serve scans codes only — no full-vector table in the plan") {
-    import graft.textops.Pipelines
-    val dir = java.nio.file.Files.createTempDirectory("graftpqplan").toString
-    Pipelines.materializePq(spark, sf, dir)
-    val queries = Tables.embeddings(spark, sf)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as v")
-    val plan = planString(Pipelines.annSearchPqFrom(spark, dir, queries,
-      excludeSelfId = true))
-    assert(plan.contains("pq_codes"),
-      "stored codes are not the candidate side of the serve join")
-    assert(!plan.contains("ann_assign"),
-      "the ADC serve read the full-vector table — the footprint claim is void")
-  }
-
   test("item_rank: edge subtree dedupes to ReusedExchange across iterations") {
     val plan = planString(GraphAnalytics.itemRank(spark, sf))
     // one real exchange for the edge build + a ReusedExchange per
@@ -360,6 +346,60 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("srpprobes("), "query side lost the probe expression")
     assert(plan.contains("srpsig("),
       "index side no longer computes bare signatures — probe fan-out leaked into the index")
+  }
+
+  test("similarity_sq8 / similarity_lsh: the id-only stage's exchange carries no vector; full vectors join after it") {
+    // ship ids, not vectors: SQ8 ranks on quantized codes and LSH
+    // distincts (query_id, neighbor_id) pairs; the 64-double vectors
+    // re-attach to the survivors only (Similarity.survivorCosine). The
+    // pinned exchange is the one feeding the SQ8 rank window and the
+    // LSH pair distinct.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.types.{ArrayType, DoubleType}
+    import graft.textops.Similarity
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    def exchangeBelow(p: SparkPlan): ShuffleExchangeLike =
+      kids(p).flatMap(nodes).collectFirst { case s: ShuffleExchangeLike => s }
+        .getOrElse(fail(s"no exchange below:\n$p"))
+    def vectorCols(p: SparkPlan): Seq[String] = p.output.filter(_.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }).map(_.name)
+    val tiers: Seq[(String, DataFrame, SparkPlan => Boolean)] = Seq(
+      ("similarity_sq8", Similarity.similaritySq8(spark, sf), {
+        case w: WindowExec => w.partitionSpec.exists(
+          _.references.exists(_.name == "query_id"))
+        case _ => false }),
+      ("similarity_lsh", Similarity.similarityLsh(spark, sf), {
+        case h: HashAggregateExec => h.aggregateExpressions.isEmpty &&
+          h.groupingExpressions.map(_.name).toSet ==
+            Set("query_id", "neighbor_id")
+        case _ => false }))
+    for ((tier, df, stage) <- tiers) {
+      df.collect() // materialize the AQE final plan
+      val all = nodes(df.queryExecution.executedPlan)
+      val ex = exchangeBelow(all.find(stage)
+        .getOrElse(fail(s"$tier: id-only stage missing from the plan")))
+      assert(vectorCols(ex).isEmpty,
+        s"$tier: ${vectorCols(ex)} ride the exchange feeding the id-only stage:\n" +
+          ex.simpleString(400))
+      val attach = all.collect {
+        case j: BaseJoinExec if j.output.exists(_.name == "qv") => j }
+      assert(attach.nonEmpty, s"$tier: no join attaches the query vectors")
+      assert(attach.forall(j => nodes(j).exists(_ eq ex)),
+        s"$tier: vectors join before the id-only exchange, not after it")
+    }
   }
 
   test("similarity recall gates (lsh/lshmp/ivf/ivf_trained/pq): panel filter pushes below the rank window (gate is panel-bounded, not self-kNN)") {
